@@ -351,7 +351,16 @@ def run_one(df) -> None:
     # ~0.4-0.8 s slower in-bench than standalone before the purge).
     # Unpersisting AFTER the action is always safe: each rep's own
     # construction re-pins what it needs.
-    spark = df.sparkSession
+    release_pins(df.sparkSession)
+
+
+def release_pins(spark) -> None:
+    """Drop every cached plan and persisted block in the session.
+    ``clearCache`` goes through Spark's CacheManager first; the raw
+    sweep then frees what it never knew about (localCheckpoint blocks).
+    The raw sweep alone would leave stale cached-plan entries that turn
+    a later identical-plan persist into a silent no-op."""
+    spark.catalog.clearCache()
     for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
         rdd.unpersist()
 
@@ -614,11 +623,7 @@ def main() -> None:
     # between queries only — the three samples of one query still share
     # whatever they always shared, so per-query methodology is
     # unchanged from r14; cross-query interference is what goes.
-    def _release_pins() -> None:
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-
-    _release_pins()  # warmups pinned nothing we want to keep either
+    release_pins(spark)  # warmups pinned nothing we want to keep either
     for name in names:
         samples = []
         for _ in range(3):
@@ -628,7 +633,7 @@ def main() -> None:
         best = min(samples)
         times[name] = round(best, 4)
         spreads[name] = round((max(samples) - best) / best, 3)
-        _release_pins()
+        release_pins(spark)
     # Min-of-runs merge (official sf0.1 @ 32-core runs only — see
     # module docstring): fold this run's per-query best-of-3 into the
     # prior BENCH_DETAIL.json minima when the merge epoch matches.  The
@@ -717,7 +722,7 @@ def main() -> None:
         if big_dir:
             curve: dict[str, dict[str, float]] = {}
             for name in SCALE_PROBE:
-                _release_pins()  # same between-queries hygiene as sf0.1
+                release_pins(spark)  # same between-queries hygiene as sf0.1
                 run_one(qs[name](spark, big_dir))  # warm (fresh file footers)
                 best = float("inf")
                 for _ in range(3):

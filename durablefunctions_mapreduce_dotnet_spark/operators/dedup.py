@@ -5,7 +5,9 @@ north-star scope in BASELINE.json):
 
 * exact          — hash-groupBy on a text fingerprint (+ the incremental
                    ingest-vs-history variant)
-* MinHash+LSH    — shingle → signature → banded bucket join → verify
+* MinHash+LSH    — one fused Arrow kernel (64-bit rolling shingle hashes
+                   + signature + band keys) → banded bucket join →
+                   exact Jaccard over those same hashes
 * SimHash        — 64-bit sign-aggregated token hashes, hamming candidates
 * n-gram Jaccard — inverted-index self-join with exact set overlap
 * embedding      — exact distributed block-gemm pairs AND the
@@ -86,144 +88,7 @@ def incremental_dedup(
 # --- shingling / MinHash ----------------------------------------------------
 
 
-def shingle_expr(text_col: str, k: int = 9, lowered: bool = False) -> F.Column:
-    """Distinct lowercase character k-shingles, computed per-row (no
-    explode).  Pass ``lowered=True`` with a pre-lowered MATERIALIZED
-    column: referencing ``lower(text)`` inside the transform lambda
-    re-runs the O(len) lowercasing per shingle position — the
-    O(len²)-per-document interpreted-HOF pattern (r08) — while
-    substring over a bound attribute is cheap."""
-    src = text_col if lowered else f"lower({text_col})"
-    return F.expr(
-        f"array_distinct(transform(sequence(1, greatest(length({src}) - {k - 1}, 1)),"
-        f" i -> substring({src}, i, {k})))"
-    )
-
-
 _MERSENNE = 2147483647  # 2^31 - 1
-
-
-def shingle_hashes_expr(shingles_col: str) -> F.Column:
-    """31-bit base hash per shingle — the only string hashing in MinHash,
-    done exactly once per shingle."""
-    return F.expr(f"transform({shingles_col}, s -> xxhash64(s) & {_MERSENNE}L)")
-
-
-def minhash_signature_udf(num_hashes: int = 63, seed: int = 42):
-    """Arrow-vectorized MinHash signature: one numpy (|shingles| × k)
-    broadcasted min per row.
-
-    Spark's higher-order functions are interpreted (no whole-stage
-    codegen for lambda expressions), so a pure-expression form of the
-    same (a·h + b) mod p family costs ~100 ns per (shingle, k) pair —
-    measured 15 s for 5 000 docs × 64 hashes.  The same arithmetic in
-    numpy over Arrow batches is ~20 µs per row (~50× faster
-    end-to-end), which is why this one stage breaks the
-    built-ins-only rule."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    import random
-
-    rng = random.Random(seed)
-    a = np.array([rng.randrange(1, _MERSENNE) for _ in range(num_hashes)], dtype=np.uint64)
-    b = np.array([rng.randrange(0, _MERSENNE) for _ in range(num_hashes)], dtype=np.uint64)
-
-    # NB: annotations must be real types here (module has `from
-    # __future__ import annotations`, which would stringify hints and
-    # break pandas_udf's type inference) — so hint via locals:
-    def _sig(hs):
-        return _sig_impl(hs)
-
-    _sig.__annotations__ = {"hs": pd.Series, "return": pd.Series}
-
-    def _sig_impl(hs):
-        out = []
-        for h in hs:
-            h = np.asarray(h, dtype=np.uint64)  # base hashes < 2^31
-            if h.size == 0:
-                out.append(np.full(num_hashes, _MERSENNE, dtype=np.int64))
-                continue
-            # h < 2^31 and a < 2^31 ⇒ products < 2^62: no uint64 overflow
-            m = (h[:, None] * a[None, :] + b[None, :]) % _MERSENNE
-            out.append(m.min(axis=0).astype(np.int64))
-        return pd.Series(out)
-
-    return pandas_udf("array<bigint>")(_sig)
-
-
-def minhash_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 63,
-    bands: int = 21,
-    shingle_k: int = 9,
-    max_bucket: int = 200,
-    checkpoint: CheckpointFn = local_checkpoint,
-) -> DataFrame:
-    """Candidate near-duplicate pairs via banded MinHash LSH.
-
-    Parameter choice is driven by measured separation on text corpora:
-    char-9-shingles put unrelated docs at J ≈ 0.02 (max ≈ 0.1 over 20k
-    sampled pairs) while near-dups sit at J ≥ 0.8, so bands=21 ×
-    rows-per-band=3 gives P(miss) = (1-J³)²¹ ≤ 2e-8 at J = 0.83 and a
-    background collision rate of J³·21 ≈ 3e-4 — candidates stay linear
-    in the corpus, not quadratic.  (rows-per-band=2 with 5-shingles,
-    the naive choice, admitted ~20 % of ALL pairs as candidates:
-    background J ≈ 0.17 and (1-J²)·32 band draws is far too loose.)
-    Buckets larger than ``max_bucket`` are dropped — a degenerate key
-    (e.g. boilerplate-heavy shingles) would otherwise produce a
-    quadratic task.
-    """
-    hs_tbl = shingle_hash_table(df, text_col, id_col, shingle_k, checkpoint)
-    return minhash_candidates_from_hashes(hs_tbl, id_col, num_hashes, bands, max_bucket)
-
-
-def shingle_hash_table(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 9,
-    checkpoint: CheckpointFn = local_checkpoint,
-) -> DataFrame:
-    """(id, hs: array<long>) — one shingling+hashing pass over the corpus,
-    eagerly checkpointed because BOTH candidate generation and Jaccard
-    verification consume it (without pinning, the most expensive stage of
-    the pipeline would execute once per consumer branch).
-
-    ``checkpoint`` picks the lineage cut (same contract as
-    ``graph.connected_components``): the ``local_checkpoint`` default is
-    right single-node but dies with a lost executor — pass
-    ``graph.reliable_checkpoint(dir)`` (or a DISK_ONLY persist) on a
-    real cluster."""
-    src = _widen(df.select(F.col(id_col), F.col(text_col)))
-    lc = src.select(F.col(id_col), F.lower(F.col(text_col)).alias("_lc"))
-    return checkpoint(
-        lc.select(
-            F.col(id_col), shingle_expr("_lc", shingle_k, lowered=True).alias("sh")
-        )
-        .select(F.col(id_col), shingle_hashes_expr("sh").alias("hs"))
-    )
-
-
-def _minhash_family(num_hashes: int, seed: int):
-    """The shared (a·h + b) mod 2³¹−1 hash family, as numpy arrays —
-    one definition so the expression path and the fused Arrow path
-    produce signatures from identical coefficients."""
-    import random
-
-    import numpy as np
-
-    rng = random.Random(seed)
-    a = np.array(
-        [rng.randrange(1, _MERSENNE) for _ in range(num_hashes)], dtype=np.uint64
-    )
-    b = np.array(
-        [rng.randrange(0, _MERSENNE) for _ in range(num_hashes)], dtype=np.uint64
-    )
-    return a, b
 
 
 def shingle_minhash_table_fast(
@@ -235,28 +100,31 @@ def shingle_minhash_table_fast(
     seed: int = 42,
     bands: int | None = None,
 ) -> DataFrame:
-    """(id, hs, sig) in ONE Arrow pass over the raw text — the fused
-    fast path for the MinHash pipeline (same shape as the
+    """(id, hs, sig) in ONE Arrow pass over the raw text — the MinHash
+    pipeline's only signature kernel (same shape as the
     ``char_entropy_fast`` kernel in textops).
 
-    The expression path pays for three interpreted higher-order stages
-    per document (substring transform → array_distinct → xxhash64
-    transform) before the signature UDF even starts; here the k-gram
-    hashes come from one vectorized polynomial rolling hash over the
-    UTF-32 codepoints (uint64 wraparound arithmetic, numpy
-    sliding-window view — no per-shingle Python, no per-shingle string
-    allocation) and the signature is the same (a·h+b) mod p family
-    applied to the SAME batch while it is hot in cache.  One Python
-    worker round-trip instead of two, zero JVM lambda interpretation.
+    ``hs`` is the per-document set of distinct lowercase character
+    ``shingle_k``-gram hashes, from one vectorized polynomial rolling
+    hash over the UTF-32 codepoints (uint64 wraparound arithmetic,
+    numpy sliding-window view — no per-shingle Python, no per-shingle
+    string allocation).  A document no longer than ``shingle_k`` is one
+    whole-text shingle.  ``sig`` is the (a·h + b) mod 2³¹−1 MinHash
+    family applied to the SAME batch while it is hot in cache.
 
-    The hash VALUES differ from the xxhash64 expression path — harmless
-    by design: ``hs`` only ever feeds set intersections (Jaccard is
+    Why Arrow and not built-in expressions: Spark's higher-order
+    functions are interpreted (no whole-stage codegen for lambdas), so
+    the expression form of shingling (substring transform →
+    array_distinct → xxhash64 transform) plus the same hash family cost
+    ~100 ns per (shingle, hash) pair — measured 15 s for 5 000 docs ×
+    64 hashes — while the numpy arithmetic over Arrow batches is
+    ~20 µs per row.
+
+    ``hs`` only ever feeds set intersections (Jaccard is
     hash-family-agnostic) and ``sig`` only ever feeds LSH banding, whose
-    recall bound (1-(1-J^r)^bands, P(miss) ≤ 2e-8 at J = 0.83 with the
-    default 21×3) holds for any uniform family.  Exact-Jaccard
-    verification downstream keeps precision exact either way;
-    tests/test_llm_ops.py pins fast == slow on the FINAL verified
-    pairs.
+    recall bound (1-(1-J^r)^bands, see :func:`minhash_near_dup_pairs`)
+    holds for any uniform family; exact-Jaccard verification downstream
+    keeps precision exact.
 
     ``bands`` (optional) additionally emits a ``buckets array<bigint>``
     column — the per-band LSH bucket keys, hashed from the signature
@@ -264,13 +132,19 @@ def shingle_minhash_table_fast(
     plain explode instead of an interpreted
     transform/xxhash64/slice expression chain over every signature
     (measured: the expression-side banding was the single largest cost
-    of the pipeline at sf0.1).  Bucket keys embed the band index; any
-    uniform family preserves the banding recall bound, so the family
-    need not match the expression path's xxhash64."""
+    of the pipeline at sf0.1).  Bucket keys embed the band index."""
+    import random
+
     import numpy as np
     import pandas as pd
 
-    a, b = _minhash_family(num_hashes, seed)
+    rng = random.Random(seed)
+    a = np.array(
+        [rng.randrange(1, _MERSENNE) for _ in range(num_hashes)], dtype=np.uint64
+    )
+    b = np.array(
+        [rng.randrange(0, _MERSENNE) for _ in range(num_hashes)], dtype=np.uint64
+    )
     base = np.uint64(1099511628211)  # FNV-64 prime, odd ⇒ full-period mod 2^64
     pows = np.empty(shingle_k, dtype=np.uint64)
     pows[-1] = np.uint64(1)
@@ -327,8 +201,8 @@ def shingle_minhash_table_fast(
                     t.lower().encode("utf-32-le"), dtype=np.uint32
                 ).astype(np.uint64)
                 if codes.size <= shingle_k:
-                    # mirrors the expression path's single whole-text
-                    # shingle for short docs: one window, one hash
+                    # a short doc is one whole-text shingle: one window,
+                    # one hash
                     h = np.array(
                         [(codes * pows[: codes.size]).sum(dtype=np.uint64)],
                         dtype=np.uint64,
@@ -359,46 +233,6 @@ def shingle_minhash_table_fast(
     return src.mapInPandas(batches, schema)
 
 
-def banded_pairs_from_sig(
-    sig_tbl: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 21,
-    rows_per_band: int = 3,
-    max_bucket: int = 200,
-) -> DataFrame:
-    """Banding + bucket-join from a precomputed (id, sig) table — the
-    shared tail of both signature paths."""
-    # Bucket key embeds the band index, so each doc lands in exactly one
-    # bucket per band — no distinct needed before grouping.
-    banded = sig_tbl.select(
-        F.col(id_col).alias("_id"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}),"
-                f" b -> xxhash64(b, slice(sig, b * {rows_per_band} + 1, {rows_per_band})))"
-            )
-        ).alias("bucket"),
-    )
-    # One shuffle total for candidate generation: group ids per bucket,
-    # cap the bucket (skew guard), emit in-bucket pair combinations with
-    # a per-row nested transform.  No self-join → the signature pipeline
-    # runs exactly once.
-    buckets = (
-        banded.groupBy("bucket")
-        .agg(F.collect_list("_id").alias("ids"))
-        .where(F.size("ids").between(2, max_bucket))
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ids, (x, i) -> transform(slice(ids, i + 2, size(ids)),"
-                " y -> struct(least(x, y) AS a, greatest(x, y) AS b))))"
-            )
-        ).alias("p")
-    )
-    return pairs.select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b")).distinct()
-
-
 def banded_pairs_from_buckets(
     tbl: DataFrame,
     id_col: str = "doc_id",
@@ -406,8 +240,13 @@ def banded_pairs_from_buckets(
 ) -> DataFrame:
     """Banding tail over PRECOMPUTED per-band bucket keys (the fused
     kernel's ``buckets`` column): explode → group → in-bucket pair
-    combinations — same shuffle shape as :func:`banded_pairs_from_sig`
-    minus the interpreted signature-slicing expressions."""
+    combinations.  Bucket keys embed the band index, so each doc lands
+    in exactly one bucket per band — no distinct needed before
+    grouping.  One shuffle total for candidate generation, and buckets
+    larger than ``max_bucket`` are dropped (skew guard: a degenerate
+    key, e.g. boilerplate-heavy shingles, would otherwise produce a
+    quadratic task).  No self-join, so the signature table is scanned
+    once."""
     banded = tbl.select(
         F.col(id_col).alias("_id"), F.explode("buckets").alias("bucket")
     )
@@ -427,61 +266,33 @@ def banded_pairs_from_buckets(
     return pairs.select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b")).distinct()
 
 
-def minhash_candidates_from_hashes(
-    hs_tbl: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 63,
-    bands: int = 21,
-    max_bucket: int = 200,
-) -> DataFrame:
-    rows_per_band = num_hashes // bands
-    sig = hs_tbl.select(
-        id_col, minhash_signature_udf(num_hashes)(F.col("hs")).alias("sig")
-    )
-    return banded_pairs_from_sig(sig, id_col, bands, rows_per_band, max_bucket)
-
-
 def jaccard_verify(
-    df: DataFrame,
     pairs: DataFrame,
-    text_col: str = "text",
+    hashes: DataFrame,
     id_col: str = "doc_id",
-    shingle_k: int = 9,
     threshold: float = 0.6,
-    hashes: DataFrame | None = None,
     checkpoint: CheckpointFn = local_checkpoint,
 ) -> DataFrame:
     """Exact Jaccard on candidate pairs only (never all-pairs).
     Integer-ratio arithmetic → deterministic doubles.
 
-    The intersection runs over 64-bit shingle *hashes*, not the strings:
-    same Jaccard (xxhash64 collisions are ~|shingles|²/2⁶⁴ ≈ 1e-7 on a
-    5k-doc corpus, and parity with the string-based oracle is asserted),
-    but the arrays are 8-byte longs instead of 9-char strings — cheaper
-    to shuffle and to hash-probe.
+    ``hashes`` is the (id, hs) projection of the fused table
+    (:func:`shingle_minhash_table_fast`), so verification reuses the
+    pipeline's one shingling pass.  The intersection runs over the
+    kernel's 64-bit rolling shingle *hashes*, not the strings: same
+    Jaccard (collisions are ~|shingles|²/2⁶⁴ ≈ 1e-7 on a 5k-doc corpus,
+    and parity with the string-based oracle is asserted), but the
+    arrays are 8-byte longs instead of 9-char strings — cheaper to
+    shuffle and to hash-probe.
 
-    ``hashes`` (from ``shingle_hash_table``) lets callers reuse the
-    pipeline's one shingling pass; when absent, shingles are computed
-    only for docs that appear in some candidate pair (semi-join first) —
-    at scale candidates are a vanishing fraction of the corpus.
-
-    ``pairs`` feeds multiple branches (ids-union + final join) and is
-    pinned through ``checkpoint`` (default: eager localCheckpoint) —
-    candidate-sized, tiny.  r14 note: an experiment dropping this cut
-    when ``hashes`` is provided (single consumer) measured consistently
-    SLOWER end-to-end (dedup_minhash ~2.6 vs ~2.0 s, cluster_sizes
-    ~3.3 vs ~2.3 s interleaved A/B): materialized candidate sizes let
-    AQE plan the verify join from exact stats, which beats saving the
-    checkpoint job — so the eager cut stays unconditional."""
+    ``pairs`` is pinned through ``checkpoint`` (default: eager
+    localCheckpoint) — candidate-sized, tiny.  r14 note: an experiment
+    dropping this cut measured consistently SLOWER end-to-end
+    (dedup_minhash ~2.6 vs ~2.0 s, cluster_sizes ~3.3 vs ~2.3 s
+    interleaved A/B): materialized candidate sizes let AQE plan the
+    verify join from exact stats, which beats saving the checkpoint
+    job — so the eager cut stays unconditional."""
     pairs = checkpoint(pairs)
-    if hashes is None:
-        ids = (
-            pairs.select(F.col("id_a").alias(id_col))
-            .union(pairs.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        needed = df.join(ids, id_col, "semi")
-        hashes = shingle_hash_table(needed, text_col, id_col, shingle_k)
     a = hashes.select(F.col(id_col).alias("id_a"), F.col("hs").alias("hs_a"))
     b = hashes.select(F.col(id_col).alias("id_b"), F.col("hs").alias("hs_b"))
     inter = F.size(F.array_intersect("hs_a", "hs_b"))
@@ -508,18 +319,24 @@ def minhash_near_dup_pairs(
     shingle_k: int = 9,
     max_bucket: int = 200,
     checkpoint: CheckpointFn = local_checkpoint,
-    fast: bool = True,
     table: DataFrame | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline sharing ONE shingling pass:
-    hash table → banded candidates → exact-Jaccard verification.
-    ``checkpoint`` picks the lineage cut for the shared pass and the
+    fused hash+signature table (:func:`shingle_minhash_table_fast`) →
+    banded candidates (:func:`banded_pairs_from_buckets`) →
+    exact-Jaccard verification (:func:`jaccard_verify`).
+    ``checkpoint`` picks the lineage cut for the shared table and the
     candidate set (graph.reliable_checkpoint(dir) on a cluster).
 
-    ``fast=True`` (default) computes shingle hashes AND signatures in a
-    single fused Arrow kernel (:func:`shingle_minhash_table_fast`);
-    ``fast=False`` keeps the two-stage expression+UDF formulation —
-    identical FINAL pairs (pytest-pinned), different hash family.
+    Parameter choice is driven by measured separation on text corpora:
+    char-9-shingles put unrelated docs at J ≈ 0.02 (max ≈ 0.1 over 20k
+    sampled pairs) while near-dups sit at J ≥ 0.8, so bands=21 ×
+    rows-per-band=3 gives P(miss) = (1-J³)²¹ ≤ 2e-8 at J = 0.83 and a
+    background collision rate of J³·21 ≈ 3e-4 — candidates stay linear
+    in the corpus, not quadratic.  (rows-per-band=2 with 5-shingles,
+    the naive choice, admitted ~20 % of ALL pairs as candidates:
+    background J ≈ 0.17 and (1-J²)·32 band draws is far too loose.)
+    Buckets larger than ``max_bucket`` are dropped.
 
     Negative result pinned (r15, plans/r15/ab_dedup_cuts.py): dropping
     the candidate-pairs eager cut (identity ``checkpoint`` for the
@@ -532,37 +349,29 @@ def minhash_near_dup_pairs(
     small-path era too: AQE plans the verify join from the cut frame's
     exact stats.  The eager pairs cut stays.
 
-    ``table`` (fast path only): a PRECOMPUTED, already-checkpointed
-    fused table for ``df`` — ``shingle_minhash_table_fast(df, …,
-    bands=bands)`` with the same parameters.  This is the stored-table
-    production shape (sources/sinks.py): a caller that needs the same
-    corpus signed for several passes (e.g. a full-corpus pass AND an
-    incremental pass over the same history) pays the one corpus-sized
-    Arrow pass once instead of once per consumer."""
-    if fast:
-        # The fused table feeds two consumers whose stages run
-        # CONCURRENTLY in the final job (the banding shuffle and the
-        # verify-join hash exchanges), so a lazy pin would compute the
-        # Arrow pass once per racing stage — the EAGER checkpoint that
-        # materializes it first is load-bearing, not overhead
-        # (measured r14: lazy persist regressed dedup_minhash ~2x).
-        tbl = table if table is not None else checkpoint(
-            shingle_minhash_table_fast(
-                df, text_col, id_col, shingle_k, num_hashes, bands=bands
-            )
+    ``table``: a PRECOMPUTED, already-checkpointed fused table for
+    ``df`` — ``shingle_minhash_table_fast(df, …, bands=bands)`` with the
+    same parameters.  This is the stored-table production shape
+    (sources/sinks.py): a caller that needs the same corpus signed for
+    several passes (e.g. a full-corpus pass AND an incremental pass
+    over the same history) pays the one corpus-sized Arrow pass once
+    instead of once per consumer."""
+    # The fused table feeds two consumers whose stages run
+    # CONCURRENTLY in the final job (the banding shuffle and the
+    # verify-join hash exchanges), so a lazy pin would compute the
+    # Arrow pass once per racing stage — the EAGER checkpoint that
+    # materializes it first is load-bearing, not overhead
+    # (measured r14: lazy persist regressed dedup_minhash ~2x).
+    tbl = table if table is not None else checkpoint(
+        shingle_minhash_table_fast(
+            df, text_col, id_col, shingle_k, num_hashes, bands=bands
         )
-        cand = banded_pairs_from_buckets(
-            tbl.select(id_col, "buckets"), id_col, max_bucket
-        )
-        return jaccard_verify(
-            df, cand, text_col, id_col, shingle_k, threshold,
-            hashes=tbl.select(id_col, "hs"), checkpoint=checkpoint,
-        )
-    hs_tbl = shingle_hash_table(df, text_col, id_col, shingle_k, checkpoint)
-    cand = minhash_candidates_from_hashes(hs_tbl, id_col, num_hashes, bands, max_bucket)
+    )
+    cand = banded_pairs_from_buckets(
+        tbl.select(id_col, "buckets"), id_col, max_bucket
+    )
     return jaccard_verify(
-        df, cand, text_col, id_col, shingle_k, threshold,
-        hashes=hs_tbl, checkpoint=checkpoint,
+        cand, tbl.select(id_col, "hs"), id_col, threshold, checkpoint
     )
 
 
@@ -587,36 +396,18 @@ def near_dedup_minhash(
 
 def token_hashes_expr(text_col: str) -> F.Column:
     """One xxhash64 per whitespace token — materialize this in its own
-    select so the 64 bit-probes below never re-hash strings."""
+    select so the SimHash kernel's 64 bit-probes never re-hash strings."""
     return F.expr(
         f"transform(filter(split(lower({text_col}), '\\\\s+'), t -> t != ''),"
         " t -> xxhash64(t))"
     )
 
 
-def simhash_from_hashes_expr(hashes_col: str) -> F.Column:
-    """64-bit SimHash from precomputed token hashes: bit b is set iff the
-    sum of ±1 contributions (bit b of each hash) is positive — pure
-    integer higher-order functions, per-row, no shuffle."""
-    return F.expr(
-        "aggregate(sequence(0, 63), cast(0 as bigint), (acc, b) -> acc + "
-        f"(case when aggregate({hashes_col}, 0, (s, h) -> s + "
-        "(case when (shiftright(h, b) & 1) = 1 then 1 else -1 end)) > 0 "
-        "then shiftleft(cast(1 as bigint), b) else cast(0 as bigint) end))"
-    )
-
-
-def simhash_expr(text_col: str) -> F.Column:
-    """Convenience single-expression form (tests); prefer the two-step
-    ``token_hashes_expr`` → ``simhash_from_hashes_expr`` in plans."""
-    return simhash_from_hashes_expr(f"transform(filter(split(lower({text_col}), '\\\\s+'), t -> t != ''), t -> xxhash64(t))")
-
-
 def simhash_from_hashes_udf(n_bits: int = 64):
-    """numpy SimHash over Arrow batches — integer-identical to
-    ``simhash_from_hashes_expr`` (bit b set iff Σ±1 > 0, sign from bit b
-    of each token hash) but ~50× faster: the nested-aggregate expression
-    is interpreted per (bit, token) pair (64×|tokens| lambda evals/row).
+    """numpy SimHash over Arrow batches: bit b is set iff the sum of ±1
+    contributions (bit b of each token hash) is positive.  The
+    equivalent nested-aggregate expression measured ~50× slower — it is
+    interpreted per (bit, token) pair (64×|tokens| lambda evals/row).
     ``n_bits < 64`` folds only the low bits (used by the portable 60-bit
     md5 variant, whose values always fit a signed bigint)."""
     import numpy as np
@@ -1477,7 +1268,7 @@ def winnow_fingerprints(
     catches one copied paragraph inside an otherwise-unrelated doc).
 
     Hashing is an Arrow-vectorized numpy kernel for the same reason the
-    MinHash signature is (``minhash_signature_udf``): the expression
+    MinHash signature is (``shingle_minhash_table_fast``): the expression
     form — a nested aggregate over substrings per position — is
     interpreted at ~40 µs per k-gram (measured: 6 s for 150k k-grams at
     sf0.001); the numpy sliding-window dot product is ~1000× cheaper.
@@ -1670,9 +1461,6 @@ def minhash_near_dup_incremental(
     anti-joined away before signature work, so an overlapping id can't
     produce duplicate signature rows or degenerate self-pairs; the pair
     transform additionally refuses a == b as defense in depth."""
-    history = history.join(
-        new_batch.select(id_col), id_col, "left_anti"
-    )
     # Both sign tables feed two consumers each whose stages race in
     # the final job (banding shuffle + verify-hash exchanges): EAGER
     # checkpoints materialize them first so neither Arrow pass runs
@@ -1689,7 +1477,8 @@ def minhash_near_dup_incremental(
     else:
         hist_tbl = checkpoint(
             shingle_minhash_table_fast(
-                history, text_col, id_col, shingle_k, num_hashes, bands=bands
+                history.join(new_batch.select(id_col), id_col, "left_anti"),
+                text_col, id_col, shingle_k, num_hashes, bands=bands,
             )
         )
     hs = hist_tbl.withColumn("_new", F.lit(False))
@@ -1719,11 +1508,6 @@ def minhash_near_dup_incremental(
             )
         ).alias("p")
     ).select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b")).distinct()
-    universe = new_batch.select(id_col, text_col).unionByName(
-        history.select(id_col, text_col)
-    )
-    hashes = nb.unionByName(hs).select(id_col, "hs")
     return jaccard_verify(
-        universe, pairs, text_col, id_col, shingle_k, threshold,
-        hashes=hashes, checkpoint=checkpoint,
+        pairs, both.select(id_col, "hs"), id_col, threshold, checkpoint
     )

@@ -60,6 +60,11 @@ def reliable_checkpoint(checkpoint_dir: str) -> CheckpointFn:
     return cut
 
 
+#: Propagation steps batched between convergence probes in
+#: ``connected_components``.
+_STEPS_PER_PROBE = 2
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
@@ -67,7 +72,6 @@ def connected_components(
     max_iter: int = 30,
     checkpoint: CheckpointFn = local_checkpoint,
     pointer_jumping: bool = False,
-    steps_per_probe: int = 2,
     pairs_distinct_ordered: bool = False,
     small_graph_threshold: int = 65_536,
 ) -> DataFrame:
@@ -92,10 +96,10 @@ def connected_components(
     sessions linked by shared IPs); for clique-ish dedup graphs the
     extra shuffle per round costs more than it saves.
 
-    ``steps_per_probe`` batches that many propagation steps between
-    convergence probes (default 2).  Total steps to the fixpoint are
-    unchanged — the probe only DETECTS it — so batching trades at most
-    ``steps_per_probe - 1`` redundant post-fixpoint steps for
+    ``_STEPS_PER_PROBE`` (2) propagation steps run between convergence
+    probes.  Total steps to the fixpoint are unchanged — the probe only
+    DETECTS it — so batching trades at most
+    ``_STEPS_PER_PROBE - 1`` redundant post-fixpoint steps for
     proportionally fewer full-frame probe aggregations and lineage
     cuts; the sum comparison across a batch is still exact (labels are
     monotone per node, so the total strictly decreases iff ANY of the
@@ -238,7 +242,7 @@ def connected_components(
 
     steps = 0
     while steps < max_iter:
-        for _ in range(min(max(steps_per_probe, 1), max_iter - steps)):
+        for _ in range(min(_STEPS_PER_PROBE, max_iter - steps)):
             labels = step(labels)
             steps += 1
         labels = cut_lazy(labels)

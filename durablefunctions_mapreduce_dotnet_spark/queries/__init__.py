@@ -327,31 +327,10 @@ _ROTATION = _HALF_B + _HALF_A
 # once a name earns its driver row, drop it from this tuple; newly added
 # queries join it.
 _WINDOW_FIRST: tuple[str, ...] = (
-    # (r14 window: every r14 pin earned its row — CORRECTNESS_r14 came
-    #  back 50/50 green, ALL hash-exact, zero red rows — and all 15 were
-    #  dropped at r15 open.  r15 re-pins below: the optimization round
-    #  changed these queries' PLANS (outputs verified identical against
-    #  the full sf0.01 DuckDB sweep before commit), so each must re-earn
-    #  a driver-green row on the new plan.)
-    # r15 re-pin: grid_layout_audit job 2 rebuilt as one GROUPING SETS
-    # marginal aggregate (was: joint-grid collect) — same bit-exact
-    # integer output, different eager-job shape
-    "curation_zorder_layout",
-    # r15 re-pin: pagerank rounds now persist (3 consumers share one
-    # computation) with the lazy cut only every 6th round
-    "graph_pagerank",
-    # r15 re-pin: the symmetrized adjacency's eager cut became a
-    # persist — the query compiles once and rides one action
-    "graph_label_propagation",
-    # r15 re-pin: canonical edge list persisted; oriented's eager cut
-    # (its first consumer) materializes the cache in the same job
-    "graph_triangles",
-    # r15 re-pin: memory-sink copy-out is an eager localCheckpoint —
-    # rows stay in the JVM instead of a pickled-Row round trip
-    "streaming_ewma",
-    # r15 re-pin: _spread's already-wide check reads the scan's file
-    # count instead of compiling a throwaway physical plan per call
-    "multimodal_gif_exact",
+    # (r15 window: all six r15 re-pins — curation_zorder_layout,
+    #  graph_pagerank, graph_label_propagation, graph_triangles,
+    #  streaming_ewma, multimodal_gif_exact — earned a green row on
+    #  their new plans in CORRECTNESS_r15 and were dropped.)
 )
 
 #: Names RE-pinned after a behavior-touching change invalidated their old
@@ -360,14 +339,7 @@ _WINDOW_FIRST: tuple[str, ...] = (
 #: green in a committed correctness file; a re-pinned name is exempt until
 #: a committed green row from a round >= the re-pin round exists (the fix
 #: has then re-earned its row and the pin must be dropped as usual).
-_REPINNED: dict[str, int] = {
-    "curation_zorder_layout": 15,
-    "graph_pagerank": 15,
-    "graph_label_propagation": 15,
-    "graph_triangles": 15,
-    "streaming_ewma": 15,
-    "multimodal_gif_exact": 15,
-}
+_REPINNED: dict[str, int] = {}
 
 
 def _modules():

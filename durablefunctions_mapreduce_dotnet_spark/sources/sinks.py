@@ -102,12 +102,14 @@ def merge_upsert_partitioned(
     keys = updates.select(*key_cols)
     kept = target.join(keys, key_cols, "left_anti")
     merged = kept.unionByName(updates.select(*kept.columns))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(target_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # per-write option, not the session conf: concurrent writers sharing
+    # one session must not see (or race on) each other's overwrite mode
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(target_path)
+    )
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

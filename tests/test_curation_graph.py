@@ -203,7 +203,7 @@ def test_connected_components_converges_on_exact_budget_boundary(spark):
     means the LAST in-budget probe is the first to see the fixpoint sum:
     the final detection-only step may not be charged against the
     propagation budget.  A 6-chain needs 5 min-label steps; with
-    steps_per_probe=2 the probes land at steps 2/4/5, every sum still
+    two steps per probe the probes land at steps 2/4/5, every sum still
     changing — only the extra post-budget probe can certify the
     fixpoint."""
     pairs = spark.createDataFrame(
@@ -212,7 +212,7 @@ def test_connected_components_converges_on_exact_budget_boundary(spark):
     got = {
         r["n"]: r["component"]
         for r in connected_components(
-            pairs, max_iter=5, steps_per_probe=2, small_graph_threshold=0
+            pairs, max_iter=5, small_graph_threshold=0
         ).collect()
     }
     assert got == {i: 1 for i in range(1, 7)}
@@ -433,6 +433,7 @@ def test_loop_operators_pinned_release_contract(spark):
     jsc = spark.sparkContext._jsc
     # A lazily-unpersisted block from an earlier test can vanish between
     # our two samples — pin the floor by purging first.
+    spark.catalog.clearCache()  # CacheManager entries too, not just blocks
     for rdd in jsc.getPersistentRDDs().values():
         rdd.unpersist()
     before = jsc.getPersistentRDDs().size()

@@ -113,6 +113,7 @@ def test_grid_layout_audit_pinned_release_contract(spark):
     )
 
     jsc = spark.sparkContext._jsc
+    spark.catalog.clearCache()  # CacheManager entries too, not just blocks
     for rdd in jsc.getPersistentRDDs().values():
         rdd.unpersist()
     before = jsc.getPersistentRDDs().size()

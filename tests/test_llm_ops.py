@@ -10,7 +10,8 @@ from pyspark.sql import functions as F
 from durablefunctions_mapreduce_dotnet_spark.operators.dedup import (
     near_dedup_minhash,
     simhash_candidates,
-    simhash_expr,
+    simhash_from_hashes_udf,
+    token_hashes_expr,
 )
 from durablefunctions_mapreduce_dotnet_spark.operators.multimodal import (
     attach_binary,
@@ -35,7 +36,12 @@ def test_simhash_identical_texts_distance_zero(spark):
         ],
         "doc_id long, text string",
     )
-    sh = {r.doc_id: r.h for r in df.select("doc_id", simhash_expr("text").alias("h")).collect()}
+    sh = {
+        r.doc_id: r.h
+        for r in df.select(
+            "doc_id", simhash_from_hashes_udf()(token_hashes_expr("text")).alias("h")
+        ).collect()
+    }
     assert sh[1] == sh[2]
     assert sh[1] != sh[3]
     pairs = simhash_candidates(df, max_hamming=0).collect()
@@ -369,11 +375,6 @@ def test_simhash_candidates_recall_is_exact_vs_bruteforce(spark):
     ground truth."""
     import itertools
 
-    from durablefunctions_mapreduce_dotnet_spark.operators.dedup import (
-        simhash_from_hashes_udf,
-        token_hashes_expr,
-    )
-
     d = read_table(spark, SF_DIR, "documents").select("doc_id", "text")
     sig = {
         r["doc_id"]: r["s"]
@@ -395,9 +396,9 @@ def test_simhash_candidates_recall_is_exact_vs_bruteforce(spark):
 
 
 def test_minhash_checkpoint_fn_is_pluggable(spark, tmp_path):
-    """shingle_hash_table / minhash_near_dup_pairs accept the same
-    lineage-cut hook as connected_components: a reliable checkpoint (the
-    100 TB setting) must produce the identical pair set as the default
+    """minhash_near_dup_pairs accepts the same lineage-cut hook as
+    connected_components: a reliable checkpoint (the 100 TB setting)
+    must produce the identical pair set as the default
     localCheckpoint."""
     from durablefunctions_mapreduce_dotnet_spark.operators.dedup import (
         minhash_near_dup_pairs,
@@ -721,29 +722,6 @@ def test_quantized_rescored_handles_foreign_queries(spark):
     n_queries = q.count()
     assert len(by_q) == n_queries
     assert all(len(v) == 3 for v in by_q.values())
-
-
-def test_minhash_fast_path_matches_expression_path(spark):
-    """The fused Arrow shingle+signature kernel must yield the SAME
-    final verified pairs as the expression+UDF path: candidates may
-    differ (different hash family) but exact-Jaccard verification at
-    the threshold makes the output hash-family-agnostic whenever LSH
-    recall is 1.0 — which the banding math guarantees for this corpus
-    (every true pair sits at J >= 0.83, P(miss) <= 2e-8)."""
-    from durablefunctions_mapreduce_dotnet_spark.operators.dedup import (
-        minhash_near_dup_pairs,
-    )
-
-    d = read_table(spark, SF_DIR, "documents")
-    slow = {
-        (r.id_a, r.id_b, round(r.jaccard, 12))
-        for r in minhash_near_dup_pairs(d, fast=False).collect()
-    }
-    fast = {
-        (r.id_a, r.id_b, round(r.jaccard, 12))
-        for r in minhash_near_dup_pairs(d, fast=True).collect()
-    }
-    assert fast == slow and len(fast) > 0
 
 
 @pytest.mark.parametrize(

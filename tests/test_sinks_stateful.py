@@ -142,6 +142,39 @@ def test_merge_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     assert sorted(glob.glob(f"{path}/part=b/*.parquet")) == before_b
 
 
+def test_merge_upsert_leaves_session_conf_alone(spark, tmp_path, monkeypatch):
+    """Dynamic overwrite is a per-write option: the upsert must never
+    flip the session-wide ``partitionOverwriteMode``, which concurrent
+    writers sharing the session would race on.  With ``conf.set``
+    forbidden, the upsert still rewrites only the touched partition."""
+    import glob
+
+    from durablefunctions_mapreduce_dotnet_spark.sources.sinks import (
+        merge_upsert_partitioned,
+    )
+
+    path = str(tmp_path / "tbl")
+    spark.createDataFrame(
+        [(1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0)],
+        "id long, part string, v double",
+    ).write.partitionBy("part").parquet(path)
+    before_b = sorted(glob.glob(f"{path}/part=b/*.parquet"))
+    updates = spark.createDataFrame([(2, "a", 99.0)], "id long, part string, v double")
+    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+
+    def forbidden(*args, **kwargs):
+        raise AssertionError(f"session conf changed: {args}")
+
+    monkeypatch.setattr(spark.conf, "set", forbidden)
+    merge_upsert_partitioned(spark, path, updates, ["id"], "part")
+    monkeypatch.undo()
+
+    got = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert got == {1: 10.0, 2: 99.0, 3: 30.0}
+    assert sorted(glob.glob(f"{path}/part=b/*.parquet")) == before_b
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == mode
+
+
 def test_merge_upsert_preserves_null_partition_rows(spark, tmp_path):
     """NULL partition values never match isin() — the upsert must still
     read (and retain) the NULL-partition slice when the batch touches it."""
