@@ -34,11 +34,14 @@ from .graph import CheckpointFn, local_checkpoint
 
 def _widen(df: DataFrame) -> DataFrame:
     """Raise occupancy for narrow inputs only: a tiny local parquet
-    arrives as 1-2 splits and would serialize the signature stage, so
-    fan it out to ``defaultParallelism``.  When the source is already at
-    least that wide (a 100 TB scan arrives with thousands of splits) the
-    exchange would be pure cost — skip it.  The partition probe plans
-    but never runs a job."""
+    arrives as 1-2 splits and would serialize the per-row Python kernel
+    that follows (MinHash signatures here, media decode in
+    operators.multimodal), so fan it out to ``defaultParallelism``.
+    When the source is already at least that wide (a 100 TB scan
+    arrives with thousands of splits) the exchange would be pure cost —
+    skip it.  Width is the planned partition count, not the input file
+    count: Spark packs small files into shared scan tasks.  The
+    partition probe plans but never runs a job."""
     p = df.sparkSession.sparkContext.defaultParallelism
     return df if df.rdd.getNumPartitions() >= p else df.repartition(p)
 
@@ -90,27 +93,33 @@ def incremental_dedup(
 
 _MERSENNE = 2147483647  # 2^31 - 1
 
+#: The MinHash-LSH pipeline's one configuration (rationale in
+#: :func:`minhash_near_dup_pairs`): character 9-shingles, 63 hashes
+#: banded 21 x 3, a fixed hash-family seed, and the bucket-size skew cap.
+_SHINGLE_K = 9
+_NUM_HASHES = 63
+_SEED = 42
+_MAX_BUCKET = 200
+
 
 def shingle_minhash_table_fast(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    shingle_k: int = 9,
-    num_hashes: int = 63,
-    seed: int = 42,
-    bands: int | None = None,
+    bands: int = 21,
 ) -> DataFrame:
-    """(id, hs, sig) in ONE Arrow pass over the raw text — the MinHash
-    pipeline's only signature kernel (same shape as the
+    """(id, hs, sig, buckets) in ONE Arrow pass over the raw text — the
+    MinHash pipeline's only signature kernel (same shape as the
     ``char_entropy_fast`` kernel in textops).
 
     ``hs`` is the per-document set of distinct lowercase character
-    ``shingle_k``-gram hashes, from one vectorized polynomial rolling
+    ``_SHINGLE_K``-gram hashes, from one vectorized polynomial rolling
     hash over the UTF-32 codepoints (uint64 wraparound arithmetic,
     numpy sliding-window view — no per-shingle Python, no per-shingle
-    string allocation).  A document no longer than ``shingle_k`` is one
-    whole-text shingle.  ``sig`` is the (a·h + b) mod 2³¹−1 MinHash
-    family applied to the SAME batch while it is hot in cache.
+    string allocation).  A document no longer than ``_SHINGLE_K`` is one
+    whole-text shingle.  ``sig`` is the ``_NUM_HASHES``-wide
+    (a·h + b) mod 2³¹−1 MinHash family (seeded with ``_SEED``) applied
+    to the SAME batch while it is hot in cache.
 
     Why Arrow and not built-in expressions: Spark's higher-order
     functions are interpreted (no whole-stage codegen for lambdas), so
@@ -126,81 +135,77 @@ def shingle_minhash_table_fast(
     holds for any uniform family; exact-Jaccard verification downstream
     keeps precision exact.
 
-    ``bands`` (optional) additionally emits a ``buckets array<bigint>``
-    column — the per-band LSH bucket keys, hashed from the signature
-    slices while the batch is hot — so the banding stage downstream is a
-    plain explode instead of an interpreted
+    ``buckets array<bigint>`` holds the per-band LSH bucket keys, hashed
+    from the signature slices while the batch is hot — so the banding
+    stage downstream is a plain explode instead of an interpreted
     transform/xxhash64/slice expression chain over every signature
     (measured: the expression-side banding was the single largest cost
-    of the pipeline at sf0.1).  Bucket keys embed the band index."""
+    of the pipeline at sf0.1).  Bucket keys embed the band index.
+    ``bands`` must not exceed ``_NUM_HASHES``."""
     import random
 
     import numpy as np
     import pandas as pd
 
-    rng = random.Random(seed)
+    rows_per_band = _NUM_HASHES // bands
+    if rows_per_band == 0:
+        # bands > _NUM_HASHES would make every per-band key a pure band
+        # offset (identical across documents): banding degenerates into
+        # _MAX_BUCKET-capped full-corpus buckets with silently collapsed
+        # recall/precision. Refuse loudly instead.
+        raise ValueError(
+            f"shingle_minhash_table_fast: bands={bands} exceeds the "
+            f"{_NUM_HASHES} MinHash hashes (rows_per_band would be 0)"
+        )
+    rng = random.Random(_SEED)
     a = np.array(
-        [rng.randrange(1, _MERSENNE) for _ in range(num_hashes)], dtype=np.uint64
+        [rng.randrange(1, _MERSENNE) for _ in range(_NUM_HASHES)], dtype=np.uint64
     )
     b = np.array(
-        [rng.randrange(0, _MERSENNE) for _ in range(num_hashes)], dtype=np.uint64
+        [rng.randrange(0, _MERSENNE) for _ in range(_NUM_HASHES)], dtype=np.uint64
     )
     base = np.uint64(1099511628211)  # FNV-64 prime, odd ⇒ full-period mod 2^64
-    pows = np.empty(shingle_k, dtype=np.uint64)
+    pows = np.empty(_SHINGLE_K, dtype=np.uint64)
     pows[-1] = np.uint64(1)
     with np.errstate(over="ignore"):  # uint64 wraparound IS the modulus
-        for i in range(shingle_k - 2, -1, -1):
+        for i in range(_SHINGLE_K - 2, -1, -1):
             pows[i] = pows[i + 1] * base
-    empty = np.array([], dtype=np.int64)
-    sig_empty = np.full(num_hashes, _MERSENNE, dtype=np.int64)
-    if bands is not None:
-        rows_per_band = num_hashes // bands
-        if rows_per_band == 0:
-            # bands > num_hashes would make every per-band key a pure band
-            # offset (identical across documents): banding degenerates into
-            # max_bucket-capped full-corpus buckets with silently collapsed
-            # recall/precision. Refuse loudly instead.
-            raise ValueError(
-                f"shingle_minhash_table_fast: bands={bands} exceeds "
-                f"num_hashes={num_hashes} (rows_per_band would be 0)"
+    # vectorized bucket key: band-index base + polynomial combine of
+    # the band's signature rows (uint64 wraparound modulus) — any
+    # uniform family works, bucket keys only ever feed grouping
+    bmul = np.empty((bands, rows_per_band), dtype=np.uint64)
+    for bi in range(bands):
+        for r in range(rows_per_band):
+            bmul[bi, r] = np.uint64(
+                pow(0x9E3779B97F4A7C15, bi * rows_per_band + r + 1, 1 << 64)
             )
-        # vectorized bucket key: band-index base + polynomial combine of
-        # the band's signature rows (uint64 wraparound modulus) — any
-        # uniform family works, bucket keys only ever feed grouping
-        bmul = np.empty((bands, rows_per_band), dtype=np.uint64)
-        for bi in range(bands):
-            for r in range(rows_per_band):
-                bmul[bi, r] = np.uint64(
-                    pow(0x9E3779B97F4A7C15, bi * rows_per_band + r + 1, 1 << 64)
-                )
-        boff = (np.arange(bands, dtype=np.uint64) + np.uint64(1)) * np.uint64(
-            0xC2B2AE3D27D4EB4F
+    boff = (np.arange(bands, dtype=np.uint64) + np.uint64(1)) * np.uint64(
+        0xC2B2AE3D27D4EB4F
+    )
+
+    def _bucket_keys(sigv: "np.ndarray") -> "np.ndarray":
+        sl = sigv.view(np.uint64)[: bands * rows_per_band].reshape(
+            bands, rows_per_band
         )
+        return ((sl * bmul).sum(axis=1, dtype=np.uint64) + boff).view(np.int64)
 
-        def _bucket_keys(sigv: "np.ndarray") -> "np.ndarray":
-            sl = sigv.view(np.uint64)[: bands * rows_per_band].reshape(
-                bands, rows_per_band
-            )
-            return ((sl * bmul).sum(axis=1, dtype=np.uint64) + boff).view(np.int64)
-
-        buckets_empty = _bucket_keys(sig_empty)
+    empty = np.array([], dtype=np.int64)
+    sig_empty = np.full(_NUM_HASHES, _MERSENNE, dtype=np.int64)
+    buckets_empty = _bucket_keys(sig_empty)
 
     def batches(it):
         for pdf in it:
-            ids = pdf[id_col]
-            hs_out, sig_out = [], []
-            bk_out = [] if bands is not None else None
+            hs_out, sig_out, bk_out = [], [], []
             for t in pdf[text_col]:
                 if t is None:
                     hs_out.append(empty)
                     sig_out.append(sig_empty)
-                    if bk_out is not None:
-                        bk_out.append(buckets_empty)
+                    bk_out.append(buckets_empty)
                     continue
                 codes = np.frombuffer(
                     t.lower().encode("utf-32-le"), dtype=np.uint32
                 ).astype(np.uint64)
-                if codes.size <= shingle_k:
+                if codes.size <= _SHINGLE_K:
                     # a short doc is one whole-text shingle: one window,
                     # one hash
                     h = np.array(
@@ -209,7 +214,7 @@ def shingle_minhash_table_fast(
                     )
                 else:
                     win = np.lib.stride_tricks.sliding_window_view(
-                        codes, shingle_k
+                        codes, _SHINGLE_K
                     )
                     h = (win * pows[None, :]).sum(axis=1, dtype=np.uint64)
                 hs = np.unique(h)
@@ -219,31 +224,24 @@ def shingle_minhash_table_fast(
                 sigv = m.min(axis=0).astype(np.int64)
                 hs_out.append(hs.view(np.int64))
                 sig_out.append(sigv)
-                if bk_out is not None:
-                    bk_out.append(_bucket_keys(sigv))
-            cols = {id_col: ids, "hs": hs_out, "sig": sig_out}
-            if bk_out is not None:
-                cols["buckets"] = bk_out
-            yield pd.DataFrame(cols)
+                bk_out.append(_bucket_keys(sigv))
+            yield pd.DataFrame(
+                {id_col: pdf[id_col], "hs": hs_out, "sig": sig_out, "buckets": bk_out}
+            )
 
-    src = _widen(df.select(F.col(id_col), F.col(text_col)))
-    schema = f"{id_col} bigint, hs array<bigint>, sig array<bigint>"
-    if bands is not None:
-        schema += ", buckets array<bigint>"
-    return src.mapInPandas(batches, schema)
+    return _widen(df.select(F.col(id_col), F.col(text_col))).mapInPandas(
+        batches,
+        f"{id_col} bigint, hs array<bigint>, sig array<bigint>, buckets array<bigint>",
+    )
 
 
-def banded_pairs_from_buckets(
-    tbl: DataFrame,
-    id_col: str = "doc_id",
-    max_bucket: int = 200,
-) -> DataFrame:
+def banded_pairs_from_buckets(tbl: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Banding tail over PRECOMPUTED per-band bucket keys (the fused
     kernel's ``buckets`` column): explode → group → in-bucket pair
     combinations.  Bucket keys embed the band index, so each doc lands
     in exactly one bucket per band — no distinct needed before
     grouping.  One shuffle total for candidate generation, and buckets
-    larger than ``max_bucket`` are dropped (skew guard: a degenerate
+    larger than ``_MAX_BUCKET`` are dropped (skew guard: a degenerate
     key, e.g. boilerplate-heavy shingles, would otherwise produce a
     quadratic task).  No self-join, so the signature table is scanned
     once."""
@@ -253,7 +251,7 @@ def banded_pairs_from_buckets(
     buckets = (
         banded.groupBy("bucket")
         .agg(F.collect_list("_id").alias("ids"))
-        .where(F.size("ids").between(2, max_bucket))
+        .where(F.size("ids").between(2, _MAX_BUCKET))
     )
     pairs = buckets.select(
         F.explode(
@@ -314,10 +312,6 @@ def minhash_near_dup_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.6,
-    num_hashes: int = 63,
-    bands: int = 21,
-    shingle_k: int = 9,
-    max_bucket: int = 200,
     checkpoint: CheckpointFn = local_checkpoint,
     table: DataFrame | None = None,
 ) -> DataFrame:
@@ -328,15 +322,17 @@ def minhash_near_dup_pairs(
     ``checkpoint`` picks the lineage cut for the shared table and the
     candidate set (graph.reliable_checkpoint(dir) on a cluster).
 
-    Parameter choice is driven by measured separation on text corpora:
-    char-9-shingles put unrelated docs at J ≈ 0.02 (max ≈ 0.1 over 20k
-    sampled pairs) while near-dups sit at J ≥ 0.8, so bands=21 ×
-    rows-per-band=3 gives P(miss) = (1-J³)²¹ ≤ 2e-8 at J = 0.83 and a
-    background collision rate of J³·21 ≈ 3e-4 — candidates stay linear
-    in the corpus, not quadratic.  (rows-per-band=2 with 5-shingles,
-    the naive choice, admitted ~20 % of ALL pairs as candidates:
-    background J ≈ 0.17 and (1-J²)·32 band draws is far too loose.)
-    Buckets larger than ``max_bucket`` are dropped.
+    The LSH configuration is fixed by the module constants, chosen from
+    measured separation on text corpora: char-``_SHINGLE_K``(=9)-shingles
+    put unrelated docs at J ≈ 0.02 (max ≈ 0.1 over 20k sampled pairs)
+    while near-dups sit at J ≥ 0.8, so ``_NUM_HASHES`` = 63 hashes
+    banded 21 × 3 rows-per-band gives P(miss) = (1-J³)²¹ ≤ 2e-8 at
+    J = 0.83 and a background collision rate of J³·21 ≈ 3e-4 —
+    candidates stay linear in the corpus, not quadratic.
+    (rows-per-band=2 with 5-shingles, the naive choice, admitted ~20 %
+    of ALL pairs as candidates: background J ≈ 0.17 and (1-J²)·32 band
+    draws is far too loose.)  Buckets larger than ``_MAX_BUCKET`` (200)
+    are dropped.
 
     Negative result pinned (r15, plans/r15/ab_dedup_cuts.py): dropping
     the candidate-pairs eager cut (identity ``checkpoint`` for the
@@ -350,8 +346,7 @@ def minhash_near_dup_pairs(
     exact stats.  The eager pairs cut stays.
 
     ``table``: a PRECOMPUTED, already-checkpointed fused table for
-    ``df`` — ``shingle_minhash_table_fast(df, …, bands=bands)`` with the
-    same parameters.  This is the stored-table production shape
+    ``df`` — ``shingle_minhash_table_fast(df, text_col, id_col)``.  This is the stored-table production shape
     (sources/sinks.py): a caller that needs the same corpus signed for
     several passes (e.g. a full-corpus pass AND an incremental pass
     over the same history) pays the one corpus-sized Arrow pass once
@@ -363,13 +358,9 @@ def minhash_near_dup_pairs(
     # materializes it first is load-bearing, not overhead
     # (measured r14: lazy persist regressed dedup_minhash ~2x).
     tbl = table if table is not None else checkpoint(
-        shingle_minhash_table_fast(
-            df, text_col, id_col, shingle_k, num_hashes, bands=bands
-        )
+        shingle_minhash_table_fast(df, text_col, id_col)
     )
-    cand = banded_pairs_from_buckets(
-        tbl.select(id_col, "buckets"), id_col, max_bucket
-    )
+    cand = banded_pairs_from_buckets(tbl.select(id_col, "buckets"), id_col)
     return jaccard_verify(
         cand, tbl.select(id_col, "hs"), id_col, threshold, checkpoint
     )
@@ -380,13 +371,12 @@ def near_dedup_minhash(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.6,
-    **kw,
 ) -> DataFrame:
     """Greedy near-dedup: drop any doc that duplicates a smaller-id doc.
     (Deterministic single pass; full connected components would need
     iterative joins — overkill for dedup, where greedy-by-id is the
     standard large-pipeline choice.)"""
-    pairs = minhash_near_dup_pairs(df, text_col, id_col, threshold=threshold, **kw)
+    pairs = minhash_near_dup_pairs(df, text_col, id_col, threshold)
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(losers, id_col, "anti")
 
@@ -1420,10 +1410,6 @@ def minhash_near_dup_incremental(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.6,
-    num_hashes: int = 63,
-    bands: int = 21,
-    shingle_k: int = 9,
-    max_bucket: int = 200,
     checkpoint: CheckpointFn = local_checkpoint,
     history_table: DataFrame | None = None,
 ) -> DataFrame:
@@ -1433,8 +1419,8 @@ def minhash_near_dup_incremental(
     near-dup completion of :func:`incremental_dedup`'s exact story.
 
     ``history_table``: the stored fused (id, hs, sig, buckets) table
-    for the UNFILTERED history corpus (``shingle_minhash_table_fast``
-    with identical parameters, already checkpointed) — exactly what a
+    for the UNFILTERED history corpus (``shingle_minhash_table_fast``,
+    already checkpointed) — exactly what a
     production deployment persists between batches (see below); when
     provided the history is never re-signed here, only anti-joined
     against re-ingested ids.
@@ -1466,9 +1452,7 @@ def minhash_near_dup_incremental(
     # checkpoints materialize them first so neither Arrow pass runs
     # twice (see minhash_near_dup_pairs — lazy pins measurably regress).
     nb = checkpoint(
-        shingle_minhash_table_fast(
-            new_batch, text_col, id_col, shingle_k, num_hashes, bands=bands
-        )
+        shingle_minhash_table_fast(new_batch, text_col, id_col)
     ).withColumn("_new", F.lit(True))
     if history_table is not None:
         hist_tbl = history_table.join(
@@ -1478,7 +1462,8 @@ def minhash_near_dup_incremental(
         hist_tbl = checkpoint(
             shingle_minhash_table_fast(
                 history.join(new_batch.select(id_col), id_col, "left_anti"),
-                text_col, id_col, shingle_k, num_hashes, bands=bands,
+                text_col,
+                id_col,
             )
         )
     hs = hist_tbl.withColumn("_new", F.lit(False))
@@ -1494,7 +1479,7 @@ def minhash_near_dup_incremental(
             F.collect_list(F.struct("_id", "_new")).alias("ids"),
             F.count(F.when(F.col("_new"), 1)).alias("_n_new"),
         )
-        .where((F.size("ids").between(2, max_bucket)) & (F.col("_n_new") >= 1))
+        .where((F.size("ids").between(2, _MAX_BUCKET)) & (F.col("_n_new") >= 1))
     )
     pairs = buckets.select(
         F.explode(

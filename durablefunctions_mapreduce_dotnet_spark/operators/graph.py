@@ -64,6 +64,10 @@ def reliable_checkpoint(checkpoint_dir: str) -> CheckpointFn:
 #: ``connected_components``.
 _STEPS_PER_PROBE = 2
 
+#: Largest pair graph (in edges) ``connected_components`` solves with a
+#: driver-side union-find instead of the distributed propagation loop.
+_SMALL_GRAPH_EDGES = 65_536
+
 
 def connected_components(
     pairs: DataFrame,
@@ -71,9 +75,7 @@ def connected_components(
     dst: str = "id_b",
     max_iter: int = 30,
     checkpoint: CheckpointFn = local_checkpoint,
-    pointer_jumping: bool = False,
     pairs_distinct_ordered: bool = False,
-    small_graph_threshold: int = 65_536,
 ) -> DataFrame:
     """(node, component) where component = MIN node id reachable via the
     undirected pair relation — min-label propagation to fixpoint.
@@ -87,14 +89,6 @@ def connected_components(
     clique-ish (verified pairs), so diameter stays small (2-4) no matter
     the corpus size — at 1000-executor scale iteration count is
     corpus-independent; per-round cost is the two shuffles.
-
-    ``pointer_jumping=True`` adds one label-chasing join per round
-    (``component <- label(component)``, valid because labels are node
-    ids and monotonically non-increasing), collapsing convergence to
-    O(log diameter) — the path-compression move of large-star/small-star
-    contraction.  Turn it on for adversarial long-chain graphs (e.g.
-    sessions linked by shared IPs); for clique-ish dedup graphs the
-    extra shuffle per round costs more than it saves.
 
     ``_STEPS_PER_PROBE`` (2) propagation steps run between convergence
     probes.  Total steps to the fixpoint are unchanged — the probe only
@@ -120,19 +114,18 @@ def connected_components(
     wastes the dedup saving, so only callers that KNOW the shape
     should set it.
 
-    ``small_graph_threshold`` is the adaptive small-input cutover (the
-    same size-gated plan choice as a broadcast join): when the
-    checkpointed pair list holds at most that many edges — ~a few MB,
-    the broadcast class, NEVER corpus-sized — the components are solved
-    with an exact driver-side union-find instead of the propagation
-    loop.  Min-label propagation and min-representative union-find
-    compute the identical (node, min reachable id) fixpoint, so the
-    output is bit-equal; what changes is the cost model: each
-    propagation round is 2 shuffles + a probe job, and on a 256-edge
-    verified-pair graph that fixed job overhead (~1.2 s at sf0.1
-    local[32]) dwarfs the actual work.  Pass 0 to always run
-    distributed.  At 100 TB the verified-pair table exceeds any sane
-    threshold and the distributed loop runs — the size check is one
+    ``_SMALL_GRAPH_EDGES`` is the adaptive small-input cutover (the
+    same size-gated plan choice as a broadcast join): when the pair
+    list holds at most that many edges — ~a few MB, the broadcast
+    class, NEVER corpus-sized — the components are solved with an exact
+    driver-side union-find instead of the propagation loop.  Min-label
+    propagation and min-representative union-find compute the identical
+    (node, min reachable id) fixpoint, so the output is bit-equal; what
+    changes is the cost model: each propagation round is 2 shuffles + a
+    probe job, and on a 256-edge verified-pair graph that fixed job
+    overhead (~1.2 s at sf0.1 local[32]) dwarfs the actual work.  At
+    100 TB the verified-pair table exceeds the cutover and the
+    distributed loop runs — the size check is one
     ``limit(t+1).toPandas()`` job that stops after t+1 rows and doubles
     as the edge collect when small, so the small path costs a single
     bounded job and no lineage-cut compile.
@@ -147,55 +140,50 @@ def connected_components(
     # two.  Opaque custom fns fall back to the eager two-job path.
     cut_lazy: CheckpointFn = getattr(checkpoint, "lazy", checkpoint)
     proj = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    if small_graph_threshold:
-        # ONE bounded job answers BOTH "is it small?" and "give me the
-        # edges": limit(t+1).toPandas() collects at most t+1 rows (the
-        # same bound the old count probe had), so a huge pair table
-        # stops after t+1 rows, while a small one arrives ready for the
-        # union-find with no second scan.  No lineage cut runs on this
-        # path — the projection is consumed exactly once, and skipping
-        # the cut also skips its driver-side Catalyst compile (r14:
-        # probe count + separate toPandas + toRdd compile were three
-        # driver waits per CC call; this is one).
-        pdf = proj.limit(small_graph_threshold + 1).toPandas()
-        if len(pdf) <= small_graph_threshold:
-            import pandas as pd
+    # ONE bounded job answers BOTH "is it small?" and "give me the
+    # edges": limit(t+1).toPandas() collects at most t+1 rows, so a huge
+    # pair table stops after t+1 rows, while a small one arrives ready
+    # for the union-find with no second scan.  No lineage cut runs on
+    # this path — the projection is consumed exactly once, and skipping
+    # the cut also skips its driver-side Catalyst compile (r14: probe
+    # count + separate toPandas + toRdd compile were three driver waits
+    # per CC call; this is one).
+    pdf = proj.limit(_SMALL_GRAPH_EDGES + 1).toPandas()
+    if len(pdf) <= _SMALL_GRAPH_EDGES:
+        import pandas as pd
 
-            parent: dict = {}
+        parent: dict = {}
 
-            def find(x):
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
+        def find(x):
+            r = x
+            while parent[r] != r:
+                r = parent[r]
+            while parent[x] != r:  # path compression
+                parent[x], x = r, parent[x]
+            return r
 
-            for u, v in zip(pdf["u"], pdf["v"]):
-                parent.setdefault(u, u)
-                parent.setdefault(v, v)
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    parent[ru] = rv
-            comp_min: dict = {}
-            for node in parent:
-                r = find(node)
-                comp_min[r] = min(comp_min.get(r, node), node)
-            out = pd.DataFrame(
-                {
-                    "n": list(parent),
-                    "component": [comp_min[find(x)] for x in parent],
-                }
-            )
-            # dtypes ride the pandas round-trip, so ids keep their
-            # source type (bigint / string) exactly like the
-            # distributed output's
-            if len(out):
-                out = out.astype({"n": pdf["u"].dtype, "component": pdf["u"].dtype})
-                return pairs.sparkSession.createDataFrame(out)
-            return proj.select(
-                F.col("u").alias("n"), F.col("u").alias("component")
-            )
+        for u, v in zip(pdf["u"], pdf["v"]):
+            parent.setdefault(u, u)
+            parent.setdefault(v, v)
+            ru, rv = find(u), find(v)
+            if ru != rv:
+                parent[ru] = rv
+        comp_min: dict = {}
+        for node in parent:
+            r = find(node)
+            comp_min[r] = min(comp_min.get(r, node), node)
+        out = pd.DataFrame(
+            {
+                "n": list(parent),
+                "component": [comp_min[find(x)] for x in parent],
+            }
+        )
+        # dtypes ride the pandas round-trip, so ids keep their source
+        # type (bigint / string) exactly like the distributed output's
+        if len(out):
+            out = out.astype({"n": pdf["u"].dtype, "component": pdf["u"].dtype})
+            return pairs.sparkSession.createDataFrame(out)
+        return proj.select(F.col("u").alias("n"), F.col("u").alias("component"))
     # Distributed path: NOW cut the incoming pair pipeline — the
     # symmetrizing union consumes it twice, and without this cut an
     # expensive upstream (e.g. the MinHash verify join) would be
@@ -228,17 +216,9 @@ def connected_components(
                 lbl.select(F.col("n").alias("v"), F.col("component")), "v"
             ).select(F.col("u").alias("n"), "component")
         )
-        lbl = lbl.union(neighbor).groupBy("n").agg(
+        return lbl.union(neighbor).groupBy("n").agg(
             F.min("component").alias("component")
         )
-        if pointer_jumping:
-            chase = lbl.select(
-                F.col("n").alias("component"), F.col("component").alias("_c2")
-            )
-            lbl = lbl.join(chase, "component", "left").select(
-                "n", F.coalesce("_c2", "component").alias("component")
-            )
-        return lbl
 
     steps = 0
     while steps < max_iter:
@@ -277,23 +257,17 @@ def canonicalize_clusters(
     dst: str = "id_b",
     checkpoint: CheckpointFn = local_checkpoint,
     pairs_distinct_ordered: bool = False,
-    small_graph_threshold: int = 65_536,
-    pointer_jumping: bool = False,
 ) -> DataFrame:
     """Full dedup keep-list: every row of ``universe`` labeled with its
     near-dup cluster id (its own id when it has no duplicate) and a
     ``keep`` flag for the canonical (minimum-id) representative —
     the operator a training-data pipeline actually applies after pair
-    generation.  ``pairs_distinct_ordered``, ``small_graph_threshold``
-    and ``pointer_jumping`` forward to :func:`connected_components`
-    (skip the edge-distinct shuffle when the pair table is already
-    distinct with src < dst; solve tiny pair graphs driver-side; add
-    the label-chasing join for chain graphs)."""
+    generation.  ``pairs_distinct_ordered`` forwards to
+    :func:`connected_components` (skip the edge-distinct shuffle when
+    the pair table is already distinct with src < dst)."""
     comp = connected_components(
         pairs, src, dst, checkpoint=checkpoint,
         pairs_distinct_ordered=pairs_distinct_ordered,
-        small_graph_threshold=small_graph_threshold,
-        pointer_jumping=pointer_jumping,
     )
     return (
         universe.select(id_col)
@@ -314,7 +288,6 @@ def incremental_components(
     src: str = "id_a",
     dst: str = "id_b",
     checkpoint: CheckpointFn = local_checkpoint,
-    broadcast_delta: bool = True,
 ) -> DataFrame:
     """Incrementally maintain min-label connected components when a NEW
     batch of pairs arrives (the recurring-crawl sibling of
@@ -340,9 +313,8 @@ def incremental_components(
     nodes (label' = delta(node)).
 
     Scale shape: O(|new pairs|) CC work + one hash join per side of the
-    new pairs + ONE join over the prior labeling — with
-    ``broadcast_delta`` (default; the delta is batch-sized by
-    construction) that join is a broadcast, so the petabyte-scale prior
+    new pairs + ONE join over the prior labeling — a broadcast of the
+    delta (batch-sized by construction), so the petabyte-scale prior
     labeling is never shuffled at all.  Equality with the full
     recompute is the driver-checked contract
     (``dedup_clusters_incremental`` shares the full-closure oracle —
@@ -373,10 +345,9 @@ def incremental_components(
         .where(F.col("u") != F.col("v"))
     )
     delta = connected_components(contracted, "u", "v", checkpoint=checkpoint)
-    dl = delta.select(
-        F.col("n").alias("_rep"), F.col("component").alias("_new")
+    dlb = F.broadcast(
+        delta.select(F.col("n").alias("_rep"), F.col("component").alias("_new"))
     )
-    dlb = F.broadcast(dl) if broadcast_delta else dl
     # prior rows: relabel components merged by the delta, keep the rest
     upd_prior = (
         prior.join(dlb, prior[comp] == dlb["_rep"], "left")

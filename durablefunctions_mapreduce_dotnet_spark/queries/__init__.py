@@ -149,7 +149,8 @@ def all_oracles() -> dict[str, str]:
 #             ann_ivf_refined_exhaustive, curation_decontaminate,
 #             text_langid_trigram(+_fast), streaming_sessionize,
 #             curation_url_normalize, ann_filtered, ann_mmr_rerank,
-#             dedup_clusters_incremental, dedup_clusters_pj,
+#             dedup_clusters_incremental, the pointer-jumping
+#             dedup_clusters variant (deleted since),
 #             curation_pack_efficiency — every one hash-exact against
 #             the local mirror at sf0.001 AND sf0.01 (strict
 #             dtype-equal) before pinning.

@@ -243,28 +243,6 @@ ORDER BY d.doc_id
 """
 
 
-def q_dedup_clusters_pj(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_clusters through the POINTER-JUMPING + fully-distributed
-    code path: ``pointer_jumping=True`` adds the label-chasing join
-    (O(log diameter) convergence for adversarial chain graphs) and
-    ``small_graph_threshold=0`` disables the driver union-find cutover,
-    so the propagation loop itself — the path a 100 TB pair table takes
-    — earns a driver value-hash row instead of resting on pytest
-    bit-equality alone.  Identical fixpoint by construction: shares
-    dedup_clusters' full-closure oracle."""
-    from ..operators.graph import canonicalize_clusters
-
-    d = read_table(spark, sf_dir, "documents")
-    pairs = minhash_near_dup_pairs(d, threshold=0.6).select("id_a", "id_b")
-    return canonicalize_clusters(
-        d,
-        pairs,
-        pairs_distinct_ordered=True,
-        small_graph_threshold=0,
-        pointer_jumping=True,
-    ).orderBy("doc_id")
-
-
 def q_dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTALLY-MAINTAINED near-dup clusters (operators.graph.
     incremental_components): even doc_ids are the stored corpus with
@@ -306,7 +284,7 @@ def q_dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-running the corpus-sized Arrow kernel (eager: the consumer
     # stages race within one job, so a lazy pin would double-compute).
     hist_tbl = local_checkpoint(
-        shingle_minhash_table_fast(hist, "text", "doc_id", 9, 63, bands=21)
+        shingle_minhash_table_fast(hist, "text", "doc_id", bands=21)
     )
     hist_pairs = minhash_near_dup_pairs(hist, threshold=0.6, table=hist_tbl).select(
         "id_a", "id_b"
@@ -729,7 +707,6 @@ QUERIES = {
     "dedup_incremental": q_dedup_incremental,
     "dedup_clusters": q_dedup_clusters,
     "dedup_clusters_incremental": q_dedup_clusters_incremental,
-    "dedup_clusters_pj": q_dedup_clusters_pj,
     "dedup_cluster_sizes": q_dedup_cluster_sizes,
     "dedup_minhash": q_dedup_minhash,
     "dedup_ngram_jaccard": q_dedup_ngram,
@@ -751,7 +728,6 @@ ORACLES = {
     "dedup_incremental": _DEDUP_INCREMENTAL_SQL,
     "dedup_clusters": _DEDUP_CLUSTERS_SQL,
     "dedup_clusters_incremental": _DEDUP_CLUSTERS_SQL,
-    "dedup_clusters_pj": _DEDUP_CLUSTERS_SQL,
     "dedup_cluster_sizes": _DEDUP_CLUSTER_SIZES_SQL,
     "dedup_minhash": _DEDUP_MINHASH_SQL,
     "dedup_ngram_jaccard": _DEDUP_NGRAM_SQL,

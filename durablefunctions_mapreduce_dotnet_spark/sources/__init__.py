@@ -1,12 +1,10 @@
 from .readers import TABLES, read_table, read_tables
-from .trips import TRIPS_SCHEMA, read_trips_csv_faithful, read_trips_csv_idiomatic, read_trips_parquet
+from .trips import read_trips_csv_faithful, read_trips_parquet
 
 __all__ = [
     "TABLES",
     "read_table",
     "read_tables",
-    "TRIPS_SCHEMA",
     "read_trips_csv_faithful",
-    "read_trips_csv_idiomatic",
     "read_trips_parquet",
 ]

@@ -6,50 +6,26 @@ iff it splits into exactly 17 fields and field 0 parses as int
 (``Sample.cs:154-157``) — that one predicate doubles as header-skip,
 blank-line-skip and malformed-row rejection.
 
-Two readers are provided:
+The CSV reader is **faithful**: ``spark.read.text`` + explicit
+``split`` reproduces the naive comma split bit-for-bit (Spark's CSV
+datasource honors quoting; the reference does not).  Whole-stage
+codegen fuses split/parse/filter into one generated loop, so this is
+still a single streaming pass.  ``read_trips_parquet`` reads the same
+columns from a parquet copy of the corpus.
 
-* **faithful** — ``spark.read.text`` + explicit ``split`` reproduces the
-  naive comma split bit-for-bit (Spark's CSV reader honors quoting; the
-  reference does not).  Whole-stage codegen fuses split/parse/filter
-  into one generated loop, so this is still a single streaming pass.
-* **idiomatic** — the CSV datasource with an explicit schema; faster
-  (vectorized parse) and the right choice when inputs are well-formed.
-
-Both attach ``input_file_name()`` as ``file`` because per-file grouping
-is load-bearing: the reference's answer is an unweighted average of
-per-file averages (``Sample.cs:196-199, 226-233``).
+Both readers attach ``input_file_name()`` as ``file`` because per-file
+grouping is load-bearing: the reference's answer is an unweighted
+average of per-file averages (``Sample.cs:196-199, 226-233``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-# FIXTURES.md §1 — NYC Yellow 2017: exactly 17 positional columns.
-TRIPS_COLUMNS = [
-    ("VendorID", T.IntegerType()),
-    ("tpep_pickup_datetime", T.TimestampType()),
-    ("tpep_dropoff_datetime", T.TimestampType()),
-    ("passenger_count", T.IntegerType()),
-    ("trip_distance", T.DoubleType()),
-    ("RatecodeID", T.IntegerType()),
-    ("store_and_fwd_flag", T.StringType()),
-    ("PULocationID", T.IntegerType()),
-    ("DOLocationID", T.IntegerType()),
-    ("payment_type", T.IntegerType()),
-    ("fare_amount", T.DoubleType()),
-    ("extra", T.DoubleType()),
-    ("mta_tax", T.DoubleType()),
-    ("tip_amount", T.DoubleType()),
-    ("tolls_amount", T.DoubleType()),
-    ("improvement_surcharge", T.DoubleType()),
-    ("total_amount", T.DoubleType()),
-]
-TRIPS_SCHEMA = T.StructType([T.StructField(n, t) for n, t in TRIPS_COLUMNS])
-
-#: columns the engine actually touches (Sample.cs:154-166) — project early
-#: so parquet/CSV readers prune the other 13.
+#: columns the engine actually touches (Sample.cs:154-166) of the 17
+#: positional NYC Yellow 2017 columns (FIXTURES.md §1) — project early
+#: so parquet readers prune the other 13.
 USED_COLUMNS = ["VendorID", "tpep_pickup_datetime", "tpep_dropoff_datetime", "trip_distance"]
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -89,20 +65,6 @@ def list_csv_files(spark: SparkSession, path: str) -> DataFrame:
     text rows in Spark; list such sources with a filesystem glob
     instead.)"""
     return spark.read.text(path).select(F.input_file_name().alias("file")).distinct()
-
-
-def read_trips_csv_idiomatic(spark: SparkSession, path: str) -> DataFrame:
-    """CSV datasource with explicit schema (vectorized, quote-aware)."""
-    df = (
-        spark.read.schema(TRIPS_SCHEMA)
-        .option("header", "true")
-        .option("timestampFormat", _TS_FMT)
-        .option("mode", "PERMISSIVE")
-        .csv(path)
-    )
-    return df.select(F.input_file_name().alias("file"), *USED_COLUMNS).where(
-        F.col("VendorID").isNotNull()
-    )
 
 
 def read_trips_parquet(spark: SparkSession, path: str) -> DataFrame:

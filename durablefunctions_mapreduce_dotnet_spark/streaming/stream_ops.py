@@ -46,6 +46,13 @@ def run_to_memory(
     """Drain a streaming aggregation synchronously into a memory sink and
     return the materialized result (test/driver harness path).
 
+    The returned frame is an EAGER local checkpoint: its rows live only
+    in executor storage blocks, with no lineage to recompute them from.
+    Consume it fully (collect, write, or join into a consumed result)
+    before any pin release — ``unpersist``, ``spark.catalog.clearCache()``
+    or a sweep of ``getPersistentRDDs()``; after that, reads of it fail
+    with missing-block errors instead of recomputing.
+
     ``progress_sink``: pass a list to receive the query's per-batch
     StreamingQueryProgress dicts (micro-batch counts, state-operator
     metrics like ``numRowsDroppedByWatermark``) — lets tests assert

@@ -56,7 +56,7 @@ def variant_b(spark, sf_dir, which):
 
     d = read_table(spark, sf_dir, "documents")
     tbl = local_checkpoint(
-        shingle_minhash_table_fast(d, "text", "doc_id", 9, 63, bands=21)
+        shingle_minhash_table_fast(d, "text", "doc_id", bands=21)
     )
     pairs = minhash_near_dup_pairs(
         d, threshold=0.6, table=tbl, checkpoint=lambda df: df

@@ -579,13 +579,15 @@ def test_pagerank_pinned_release_contract(spark):
     )
 
 
-def test_connected_components_opaque_checkpoint_fn_still_works(spark):
+def test_connected_components_opaque_checkpoint_fn_still_works(spark, monkeypatch):
     """Custom checkpoint fns without the optional .lazy sibling get the
     eager fallback — the pluggable contract is unchanged."""
+    from durablefunctions_mapreduce_dotnet_spark.operators import graph
     from durablefunctions_mapreduce_dotnet_spark.operators.graph import (
         connected_components,
     )
 
+    monkeypatch.setattr(graph, "_SMALL_GRAPH_EDGES", 0)
     calls = {"n": 0}
 
     def counting_eager(df):
@@ -597,9 +599,7 @@ def test_connected_components_opaque_checkpoint_fn_still_works(spark):
     )
     comp = {
         (r.n, r.component)
-        for r in connected_components(
-            pairs, checkpoint=counting_eager, small_graph_threshold=0
-        ).collect()
+        for r in connected_components(pairs, checkpoint=counting_eager).collect()
     }
     assert comp == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
     assert calls["n"] >= 3  # edges + labels + >=1 iteration

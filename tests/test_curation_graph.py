@@ -10,6 +10,7 @@ from durablefunctions_mapreduce_dotnet_spark.operators.curation import (
     pack_documents,
     train_val_test_split,
 )
+from durablefunctions_mapreduce_dotnet_spark.operators import graph
 from durablefunctions_mapreduce_dotnet_spark.operators.graph import (
     canonicalize_clusters,
     connected_components,
@@ -30,7 +31,7 @@ def test_connected_components_chain_star_and_islands(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 13: 10, 20: 20, 21: 20}
 
 
-def test_connected_components_small_path_matches_distributed(spark):
+def test_connected_components_small_path_matches_distributed(spark, monkeypatch):
     """The size-gated driver union-find must be bit-equal to the
     propagation loop (both compute (node, min reachable id)) — on the
     real sf corpus's minhash pair graph, on string ids, and exactly AT
@@ -45,13 +46,13 @@ def test_connected_components_small_path_matches_distributed(spark):
         (r["n"], r["component"])
         for r in connected_components(pairs, pairs_distinct_ordered=True).collect()
     }
+    monkeypatch.setattr(graph, "_SMALL_GRAPH_EDGES", 0)
     dist = {
         (r["n"], r["component"])
-        for r in connected_components(
-            pairs, pairs_distinct_ordered=True, small_graph_threshold=0
-        ).collect()
+        for r in connected_components(pairs, pairs_distinct_ordered=True).collect()
     }
     assert small == dist and small
+    monkeypatch.undo()
 
     sp = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y")], "id_a string, id_b string"
@@ -64,10 +65,10 @@ def test_connected_components_small_path_matches_distributed(spark):
     three = spark.createDataFrame(
         [(1, 2), (3, 4), (4, 5)], "id_a bigint, id_b bigint"
     )
-    at = {(r["n"], r["component"]) for r in
-          connected_components(three, small_graph_threshold=3).collect()}
-    below = {(r["n"], r["component"]) for r in
-             connected_components(three, small_graph_threshold=2).collect()}
+    monkeypatch.setattr(graph, "_SMALL_GRAPH_EDGES", 3)
+    at = {(r["n"], r["component"]) for r in connected_components(three).collect()}
+    monkeypatch.setattr(graph, "_SMALL_GRAPH_EDGES", 2)
+    below = {(r["n"], r["component"]) for r in connected_components(three).collect()}
     assert at == below == {(1, 1), (2, 1), (3, 3), (4, 3), (5, 3)}
 
 
@@ -165,40 +166,19 @@ def test_connected_components_reliable_checkpoint_path(spark, tmp_path):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_raises_when_unconverged(spark):
+def test_connected_components_raises_when_unconverged(spark, monkeypatch):
     import pytest
 
+    monkeypatch.setattr(graph, "_SMALL_GRAPH_EDGES", 0)
     # a 6-chain needs ~3 min-label rounds; max_iter=1 cannot converge
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)], "id_a bigint, id_b bigint"
     )
     with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(pairs, max_iter=1, small_graph_threshold=0)
+        connected_components(pairs, max_iter=1)
 
 
-def test_pointer_jumping_collapses_long_chain(spark):
-    """A 48-node path has diameter 47: plain min-label propagation needs
-    ~47 rounds (more than max_iter=8 -> must raise), while pointer
-    jumping chases label-of-label each round and lands the fixpoint
-    within O(log n) rounds — same labels, exponentially fewer shuffles
-    on adversarial chain graphs."""
-    import pytest
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(47)], "id_a bigint, id_b bigint"
-    )
-    got = {
-        r["n"]: r["component"]
-        for r in connected_components(
-            chain, max_iter=8, pointer_jumping=True, small_graph_threshold=0
-        ).collect()
-    }
-    assert got == {i: 0 for i in range(48)}
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(chain, max_iter=8, small_graph_threshold=0)
-
-
-def test_connected_components_converges_on_exact_budget_boundary(spark):
+def test_connected_components_converges_on_exact_budget_boundary(spark, monkeypatch):
     """Diameter exactly max_iter must converge even when probe batching
     means the LAST in-budget probe is the first to see the fixpoint sum:
     the final detection-only step may not be charged against the
@@ -206,14 +186,13 @@ def test_connected_components_converges_on_exact_budget_boundary(spark):
     two steps per probe the probes land at steps 2/4/5, every sum still
     changing — only the extra post-budget probe can certify the
     fixpoint."""
+    monkeypatch.setattr(graph, "_SMALL_GRAPH_EDGES", 0)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)], "id_a bigint, id_b bigint"
     )
     got = {
         r["n"]: r["component"]
-        for r in connected_components(
-            pairs, max_iter=5, small_graph_threshold=0
-        ).collect()
+        for r in connected_components(pairs, max_iter=5).collect()
     }
     assert got == {i: 1 for i in range(1, 7)}
 

@@ -289,6 +289,46 @@ def test_multimodal_dhash_uses_real_bmp_pixels(spark):
     assert _dhash_words(blob) != (hsh, vsh)
 
 
+def test_multimodal_kernel_widens_packed_small_file_scan(spark, tmp_path):
+    """One large plus p-1 one-row parquet files: the scan sees p input
+    files, but Spark packs the small files into shared tasks, so it has
+    fewer than p partitions.  The per-row decode kernel must still run
+    at least ``defaultParallelism`` wide — the input file count does not
+    prove the scan is already wide."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from durablefunctions_mapreduce_dotnet_spark.operators.multimodal import (
+        perceptual_dhash,
+    )
+
+    p = spark.sparkContext.defaultParallelism
+    rng = np.random.default_rng(0)
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": np.arange(2000, dtype=np.int64),
+                "content": [rng.bytes(64) for _ in range(2000)],
+            }
+        ),
+        str(tmp_path / "big.parquet"),
+    )
+    for i in range(p - 1):
+        pq.write_table(
+            pa.table(
+                {"doc_id": np.array([10_000 + i], dtype=np.int64), "content": [b"x"]}
+            ),
+            str(tmp_path / f"tiny{i}.parquet"),
+        )
+    scan = spark.read.parquet(str(tmp_path))
+    assert len(scan.inputFiles()) == p
+    assert scan.rdd.getNumPartitions() < p  # the packed case
+    out = perceptual_dhash(scan)
+    assert out.rdd.getNumPartitions() >= p
+    assert out.count() == 2000 + p - 1
+
+
 def test_multimodal_bmp_exact_features_roundtrip(spark):
     """bmp_exact_features over synth payloads: a brightness-ramp id
     must set every horizontal cross-product bit (dhash_h == -1 needs
@@ -449,7 +489,7 @@ def test_minhash_precomputed_table_paths_identical(spark):
     hist = d.where(F.col("doc_id") % 2 == 0)
     new = d.where(F.col("doc_id") % 2 == 1)
     tbl = local_checkpoint(
-        shingle_minhash_table_fast(hist, "text", "doc_id", 9, 63, bands=21)
+        shingle_minhash_table_fast(hist, "text", "doc_id", bands=21)
     )
 
     base = sorted(
@@ -1155,8 +1195,9 @@ def test_semantic_dedup_empty_residue_tiles_do_not_duplicate(spark):
 
 
 def test_minhash_fast_bands_guard(spark):
-    """bands > num_hashes would zero rows_per_band and collapse every
-    per-band bucket key to the band offset; must refuse loudly."""
+    """bands > the 63 MinHash hashes would zero rows_per_band and
+    collapse every per-band bucket key to the band offset; must refuse
+    loudly."""
     import pytest
 
     from durablefunctions_mapreduce_dotnet_spark.operators.dedup import (
@@ -1166,7 +1207,7 @@ def test_minhash_fast_bands_guard(spark):
 
     d = read_table(spark, SF_DIR, "documents")
     with pytest.raises(ValueError, match="rows_per_band"):
-        shingle_minhash_table_fast(d, num_hashes=8, bands=16)
+        shingle_minhash_table_fast(d, bands=64)
 
 
 def test_hll_incremental_estimate_within_bound(spark):
